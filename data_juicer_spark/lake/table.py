@@ -8,10 +8,14 @@ catalog can be swapped in behind it (`spark.sql("MERGE INTO ...")`) when
 the runtime jar is present — see `merge.py`.
 
 Layout:
-    <root>/metadata/snap-<id>.json   immutable snapshot manifests
-    <root>/metadata/current          pointer file (atomic os.replace)
-    <root>/data/snap-<id>/bucket=K/  parquet files for buckets REWRITTEN
-                                     by that snapshot
+    <root>/metadata/snap-<id>.json       immutable snapshot manifests
+    <root>/metadata/current              pointer file (atomic os.replace)
+    <root>/data/snap-<id>/__bucket__=K/  parquet files for buckets
+                                         REWRITTEN by that snapshot
+    <root>/data/delta-<id>/              one MOR delta: a few flat parquet
+                                         files whose rows carry their
+                                         __bucket__ and __kept__ (upsert
+                                         vs equality-delete) as columns
 
 Scale design — bucket-level copy-on-write:
   Rows are hash-bucketed on the upsert key (pmod(xxhash64(repo,path), B)).
@@ -47,6 +51,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -59,11 +64,12 @@ class SnapshotTable:
       - 'cow' (copy-on-write): each MERGE rewrites the buckets containing
         changed keys. Reads are plain scans. Best for read-heavy tables.
       - 'mor' (merge-on-read): each MERGE only WRITES the batch (upsert
-        rows + delete-key files) as a delta, Iceberg-v2-equality-delete
-        style — O(batch) per epoch regardless of table size. Reads
-        resolve base+deltas with one per-key window; `compact_every`
-        deltas trigger a compaction back into the base. Best for the
-        ingest-heavy CDC path (this repo's north metric).
+        rows + equality-delete keys, tagged by __kept__) as one delta
+        directory — O(batch) per epoch regardless of table size, with
+        about one file per write task. Reads resolve base+deltas with
+        one per-key max_by; `compact_every` deltas trigger a compaction
+        back into the base. Best for the ingest-heavy CDC path (this
+        repo's north metric).
     Both share the same manifest/commit protocol and epoch fence.
     """
 
@@ -247,11 +253,7 @@ class SnapshotTable:
 
     @staticmethod
     def _delta_buckets(snap: dict) -> set:
-        out = set()
-        for d in snap.get("deltas", []):
-            out.update(int(b) for b in d["upsert_buckets"])
-            out.update(int(b) for b in d.get("delete_buckets", {}))
-        return out
+        return {b for d in snap.get("deltas", []) for b in d["buckets"]}
 
     def read(self, buckets: Optional[List[int]] = None,
              snapshot: Optional[dict] = None,
@@ -264,7 +266,7 @@ class SnapshotTable:
 
         MOR resolution is bucket-pruned: buckets untouched by any delta
         are plain scans; only delta-touched buckets pay the per-key
-        last-writer window."""
+        last-writer aggregation."""
         if snapshot is not None and at_epoch is not None:
             raise ValueError("pass snapshot OR at_epoch, not both")
         if at_epoch is not None:
@@ -279,6 +281,8 @@ class SnapshotTable:
         schema = T.StructType.fromJson(snap["schema"])
         want = None if buckets is None else set(buckets)
         delta_bs = self._delta_buckets(snap)
+        if want is not None:
+            delta_bs &= want
 
         base_clean = [
             d for b, d in snap["buckets"].items()
@@ -287,75 +291,61 @@ class SnapshotTable:
         clean_df = self._read_dirs(base_clean, schema)
         if not delta_bs:
             return clean_df
-        resolved = self._resolve_deltas(snap, schema, want)
+        resolved = self._resolve_deltas(snap, schema, want, delta_bs)
         return clean_df.unionByName(resolved)
 
     def _resolve_deltas(self, snap: dict, schema: T.StructType,
-                        want: Optional[set],
+                        want: Optional[set], delta_bs: set,
                         cluster_by_bucket: bool = False) -> DataFrame:
-        """Last-writer-wins resolution of delta-touched buckets as ONE
-        map-side-combinable max_by aggregation: base rows rank 0, delta i
-        upserts rank i, delta i equality-delete keys rank i with a delete
-        marker; per key the max-rank entry wins and delete winners drop.
-        Ranks are unique per key (a key appears at most once per delta
-        side and once in the base), so max_by has no ties.
+        """Last-writer-wins resolution of the delta-touched buckets
+        `delta_bs` as ONE map-side-combinable max_by aggregation: base
+        rows rank 0; in delta i, equality-delete rows (__kept__ false)
+        rank 2i and upserts rank 2i+1, so a later delta always wins and,
+        within one delta, an upsert beats a delete of the same key. Per
+        key the max-rank entry wins and delete winners drop. A key has
+        at most one row per (delta, side) and one in the base, so ranks
+        are unique per key and max_by has no ties.
 
-        This replaces the earlier window(row_number) + broadcast-join
-        formulation: the agg needs no per-partition sorts, no broadcast
-        build job for the delete side, and its partial aggregation
-        collapses duplicate keys map-side before the exchange.
+        `want` prunes each delta's scan with a pushed `__bucket__ IN`
+        filter (delta files are not laid out by bucket).
 
         cluster_by_bucket=True (the compaction path) additionally keys
         the one exchange on the storage bucket instead of the raw key:
         the output is then already partitioned the way the bucketed
         rewrite must be laid out, so the follow-up write needs NO second
         exchange of the payload (2 full-payload shuffles -> 1)."""
-        base_dirty = [
-            d for b, d in snap["buckets"].items()
-            if (want is None or int(b) in want) and int(b) in self._delta_buckets(snap)
-        ]
+        base_dirty = [d for b, d in snap["buckets"].items() if int(b) in delta_bs]
         parts = [
             self._read_dirs(base_dirty, schema)
+            .withColumn("__kept__", F.lit(True))
             .withColumn("__rank__", F.lit(0))
-            .withColumn("__del__", F.lit(False))
         ]
+        delta_schema = T.StructType(schema.fields + [
+            T.StructField("__kept__", T.BooleanType()),
+            T.StructField("__bucket__", T.IntegerType())])
         for i, delta in enumerate(snap.get("deltas", []), start=1):
-            up_dirs = [
-                d for b, d in delta["upsert_buckets"].items()
-                if want is None or int(b) in want
-            ]
-            if up_dirs:
-                parts.append(
-                    self._read_dirs(up_dirs, schema)
-                    .withColumn("__rank__", F.lit(i))
-                    .withColumn("__del__", F.lit(False))
-                )
-            dl_dirs = [
-                d for b, d in delta.get("delete_buckets", {}).items()
-                if want is None or int(b) in want
-            ]
-            if dl_dirs:
-                parts.append(
-                    self.spark.read.parquet(*dl_dirs)
-                    .select(*self.key_cols)
-                    .withColumn("__rank__", F.lit(i))
-                    .withColumn("__del__", F.lit(True))
-                )
+            if delta_bs.isdisjoint(delta["buckets"]):
+                continue
+            rows = self._read_dirs([delta["dir"]], delta_schema)
+            if want is not None:
+                rows = rows.where(F.col("__bucket__").isin(sorted(want)))
+            parts.append(
+                rows.drop("__bucket__").withColumn(
+                    "__rank__", F.lit(2 * i) + F.col("__kept__").cast("int")))
         merged = parts[0]
         for p in parts[1:]:
-            merged = merged.unionByName(p, allowMissingColumns=True)
+            merged = merged.unionByName(p)
         payload = [f.name for f in schema.fields if f.name not in self.key_cols]
         group_cols = list(self.key_cols)
         if cluster_by_bucket:
-            merged = merged.withColumn("__bucket__", self._bucket_expr()) \
-                .repartition(min(self.num_buckets, 256), "__bucket__")
+            merged = self._by_bucket(merged)
             # grouping on (__bucket__, key) is satisfied by the bucket
             # hash partitioning above, so NO further exchange is planned
             group_cols = ["__bucket__"] + group_cols
         latest = merged.groupBy(*group_cols).agg(
-            F.max_by(F.struct(F.col("__del__"), *[F.col(c) for c in payload]),
+            F.max_by(F.struct(F.col("__kept__"), *[F.col(c) for c in payload]),
                      F.col("__rank__")).alias("__last__")
-        ).where(~F.col("__last__.__del__"))
+        ).where(F.col("__last__.__kept__"))
         out_cols = [F.col(f.name) if f.name in self.key_cols
                     else F.col(f"__last__.{f.name}").alias(f.name)
                     for f in schema.fields]
@@ -365,19 +355,25 @@ class SnapshotTable:
 
     # -- write / merge -----------------------------------------------------
 
+    def _by_bucket(self, df: DataFrame) -> DataFrame:
+        """df plus its __bucket__ column, hash-exchanged on it. The
+        exchange has no explicit partition count, so AQE coalesces it to
+        the data's size: the write tasks follow the batch, not
+        num_buckets, and each bucket still lands in exactly one task."""
+        return df.withColumn("__bucket__", self._bucket_expr()) \
+            .repartition("__bucket__")
+
     def _write_buckets(self, df: DataFrame, snap_id: str,
                        pre_bucketed: bool = False) -> str:
-        """Write df hash-partitioned by bucket; returns the data dir.
-        repartition on the bucket column co-locates each bucket into one
-        shuffle partition before partitionBy, so each bucket=K dir gets
-        one file per shuffle partition that holds it (no small-file
-        explosion). pre_bucketed=True: df already carries __bucket__ AND
-        is hash-partitioned by it (the compaction path), so the write
-        adds no exchange at all."""
+        """Write df partitioned into one __bucket__=K dir per bucket;
+        returns the data dir. Each bucket sits in one exchange partition
+        (see _by_bucket), so each bucket dir gets one file.
+        pre_bucketed=True: df already carries __bucket__ AND is
+        hash-partitioned by it (the compaction path), so the write adds
+        no exchange at all."""
         out = f"{self.root}/data/snap-{snap_id}"
         if not pre_bucketed:
-            df = df.withColumn("__bucket__", self._bucket_expr()) \
-                .repartition(min(self.num_buckets, 256), "__bucket__")
+            df = self._by_bucket(df)
         df.write.partitionBy("__bucket__").mode("overwrite").parquet(out)
         return out
 
@@ -422,6 +418,8 @@ class SnapshotTable:
     def merge(self, upserts: Optional[DataFrame], delete_keys: Optional[DataFrame],
               epoch: int) -> dict:
         """MERGE INTO: upsert rows keyed on key_cols, delete listed keys.
+        A key present in both `upserts` and `delete_keys` is upserted:
+        the batch's upsert wins over its delete, on both strategies.
 
         Idempotent epoch fence: if current epoch >= epoch, returns the
         current manifest unchanged (exactly-once under re-delivery).
@@ -429,6 +427,8 @@ class SnapshotTable:
         cur = self.current_snapshot()
         if cur is not None and cur["epoch"] >= epoch:
             return cur  # fenced: this epoch (or later) already committed
+        if upserts is None and delete_keys is None:
+            raise ValueError("merge needs upserts, delete_keys or both")
 
         if cur is None:
             if upserts is None:
@@ -501,51 +501,49 @@ class SnapshotTable:
         """MOR fast path for the CDC replayer: ONE shuffle + ONE write
         job lands the whole micro-batch. `flagged` carries every
         compacted row; rows with kept_col=true become the delta's
-        upserts, the rest become equality-deletes. The write is
-        partitioned by (kept, bucket), so both groups land bucketed for
-        pruning. Epoch-fenced like merge()."""
+        upserts, the rest become equality-deletes. Epoch-fenced like
+        merge()."""
         cur = self.current_snapshot()
         if cur is not None and cur["epoch"] >= epoch:
             return cur
+        flagged = flagged.drop("op", "__keep__")
         if cur is None:
-            ups = flagged.where(F.col(kept_col)).drop(kept_col)
-            drop_cols = [c for c in ("op", "__keep__") if c in ups.columns]
-            return self.init(ups.drop(*drop_cols), epoch=epoch)
+            return self.init(flagged.where(F.col(kept_col)).drop(kept_col),
+                             epoch=epoch)
+        return self._merge_delta(
+            cur, flagged.withColumnRenamed(kept_col, "__kept__"), epoch)
 
+    def _merge_delta(self, cur: dict, flagged: DataFrame, epoch: int) -> dict:
+        """Write `flagged` (table columns + boolean __kept__) as one flat
+        delta directory and commit it. __bucket__ and __kept__ stay
+        ordinary columns, so the write makes about one file per task
+        whatever num_buckets is; the touched-bucket list for the
+        manifest rides the same write job as an Observation."""
         snap_id = self._new_snap_id()
         out_dir = f"{self.root}/data/delta-{snap_id}"
-        drop_cols = [c for c in ("op", "__keep__") if c in flagged.columns]
+        seen = Observation(f"delta-{snap_id}")
         (
-            flagged.drop(*drop_cols)
-            .withColumn("__bucket__", self._bucket_expr())
-            .repartition(min(self.num_buckets, 256), "__bucket__")
-            .write.partitionBy(kept_col, "__bucket__")
-            .mode("overwrite").parquet(out_dir)
+            self._by_bucket(flagged)
+            .observe(seen, F.collect_set("__bucket__").alias("buckets"))
+            .write.mode("overwrite").parquet(out_dir)
         )
-        up_buckets, del_buckets = {}, {}
-        for side, target in ((f"{kept_col}=true", up_buckets),
-                             (f"{kept_col}=false", del_buckets)):
-            side_dir = os.path.join(out_dir, side)
-            if os.path.isdir(side_dir):
-                for name in os.listdir(side_dir):
-                    if name.startswith("__bucket__="):
-                        target[name.split("=")[1]] = f"{side_dir}/{name}"
-        delta = {"id": snap_id, "upsert_buckets": up_buckets,
-                 "delete_buckets": del_buckets}
-        ups_schema_src = flagged.drop(*drop_cols, kept_col)
+        delta = {"id": snap_id, "dir": out_dir,
+                 "buckets": sorted(seen.get["buckets"]),
+                 # perfbench/layers.py lists a delta's files from this
+                 # map; the whole delta is one dir
+                 "upsert_buckets": {"*": out_dir}}
         manifest = {
             "snapshot_id": snap_id,
             "parent": cur["snapshot_id"],
             "epoch": epoch,
-            "schema": self._evolved_schema(cur, ups_schema_src),
+            "schema": self._evolved_schema(cur, flagged.drop("__kept__")),
             "buckets": dict(cur["buckets"]),
             "deltas": list(cur.get("deltas", [])) + [delta],
             "committed_at": time.time(),
             "operation": "merge-mor",
         }
         committed = self._commit(manifest)
-        committed = self._maybe_compact(committed, epoch)
-        return committed
+        return self._maybe_compact(committed, epoch)
 
     def _maybe_compact(self, committed: dict, epoch: int) -> dict:
         """Opportunistic post-commit compaction. The merge itself is
@@ -562,48 +560,20 @@ class SnapshotTable:
 
     def _merge_mor(self, cur: dict, upserts: Optional[DataFrame],
                    delete_keys: Optional[DataFrame], epoch: int) -> dict:
-        """Write-only merge: the batch lands as a delta (bucketed upsert
-        files + bucketed equality-delete key files). No read, no join —
-        O(batch) per epoch. Every `compact_every` deltas, fold them into
-        the base (bucket-pruned rewrite)."""
-        snap_id = self._new_snap_id()
-        delta = {"id": snap_id, "upsert_buckets": {}, "delete_buckets": {}}
+        """Write-only merge: the batch lands as one delta (upsert rows
+        and equality-delete keys in one flagged frame). No read, no
+        join — O(batch) per epoch. Every `compact_every` deltas, fold
+        them into the base (bucket-pruned rewrite)."""
+        sides = []
         if upserts is not None:
-            up_dir = f"{self.root}/data/delta-{snap_id}-up"
-            (
-                upserts.withColumn("__bucket__", self._bucket_expr())
-                .repartition(min(self.num_buckets, 256), "__bucket__")
-                .write.partitionBy("__bucket__").mode("overwrite").parquet(up_dir)
-            )
-            delta["upsert_buckets"] = {
-                str(b): d for b, d in self._bucket_dirs(up_dir).items()
-            }
+            sides.append(upserts.withColumn("__kept__", F.lit(True)))
         if delete_keys is not None:
-            dl_dir = f"{self.root}/data/delta-{snap_id}-del"
-            (
-                delete_keys.select(*self.key_cols).distinct()
-                .withColumn("__bucket__", self._bucket_expr())
-                # bucket-partitioned like the upsert side: a large delete
-                # set must not funnel through one task
-                .repartition(min(self.num_buckets, 64), "__bucket__")
-                .write.partitionBy("__bucket__").mode("overwrite").parquet(dl_dir)
-            )
-            delta["delete_buckets"] = {
-                str(b): d for b, d in self._bucket_dirs(dl_dir).items()
-            }
-
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": cur["snapshot_id"],
-            "epoch": epoch,
-            "schema": self._evolved_schema(cur, upserts),
-            "buckets": dict(cur["buckets"]),
-            "deltas": list(cur.get("deltas", [])) + [delta],
-            "committed_at": time.time(),
-            "operation": "merge-mor",
-        }
-        committed = self._commit(manifest)
-        return self._maybe_compact(committed, epoch)
+            sides.append(delete_keys.select(*self.key_cols).distinct()
+                         .withColumn("__kept__", F.lit(False)))
+        flagged = sides[0]
+        for side in sides[1:]:
+            flagged = flagged.unionByName(side, allowMissingColumns=True)
+        return self._merge_delta(cur, flagged, epoch)
 
     # -- CDC-out: changelog between epochs ----------------------------------
 
@@ -669,10 +639,10 @@ class SnapshotTable:
                          data_grace_seconds: float = 300.0) -> dict:
         """Drop all but the most recent `keep_last` snapshots: delete
         their manifests and any data directory no retained manifest
-        references (bucket dirs are shared across snapshots by
-        carry-forward, so reachability is computed at bucket-dir
-        granularity). Time travel past the horizon then raises instead
-        of answering wrong. Returns {'manifests': n, 'data_dirs': n}.
+        references. Reachability is per delta dir and per base bucket
+        dir (bucket dirs are shared across snapshots by carry-forward).
+        Time travel past the horizon then raises instead of answering
+        wrong. Returns {'manifests': n, 'data_dirs': n}.
 
         Concurrency: runs UNDER the commit lock, and _commit writes its
         manifest inside the same lock — so an in-flight writer's
@@ -693,13 +663,8 @@ class SnapshotTable:
             for s in keep:
                 referenced.update(
                     os.path.normpath(d) for d in s["buckets"].values())
-                for delta in s.get("deltas", []):
-                    referenced.update(
-                        os.path.normpath(d)
-                        for d in delta["upsert_buckets"].values())
-                    referenced.update(
-                        os.path.normpath(d)
-                        for d in delta.get("delete_buckets", {}).values())
+                referenced.update(
+                    os.path.normpath(d["dir"]) for d in s.get("deltas", []))
             n_manifests = n_dirs = 0
             meta = f"{self.root}/metadata"
             for name in os.listdir(meta):
@@ -713,20 +678,20 @@ class SnapshotTable:
                 top_path = os.path.join(data, top)
                 if not os.path.isdir(top_path):
                     continue
-                for sub, dirs, _files in os.walk(top_path, topdown=False):
-                    if os.path.basename(sub).startswith("__bucket__=") \
-                            and os.path.normpath(sub) not in referenced:
-                        try:
-                            if now - os.path.getmtime(sub) < data_grace_seconds:
-                                continue  # possibly an in-flight commit's data
-                        except OSError:
-                            continue
-                        shutil.rmtree(sub, ignore_errors=True)
-                        n_dirs += 1
-                # remove now-empty containers (incl. kept_col=… levels)
-                for sub, dirs, files in os.walk(top_path, topdown=False):
-                    if not os.listdir(sub):
-                        os.rmdir(sub)
+                # a delta is one dir; base data is shared per bucket dir
+                subs = [top_path] if top.startswith("delta-") else [
+                    os.path.join(top_path, n) for n in os.listdir(top_path)
+                    if n.startswith("__bucket__=")]
+                for sub in subs:
+                    if os.path.normpath(sub) in referenced:
+                        continue
+                    try:
+                        if now - os.path.getmtime(sub) < data_grace_seconds:
+                            continue  # possibly an in-flight commit's data
+                    except OSError:
+                        continue
+                    shutil.rmtree(sub, ignore_errors=True)
+                    n_dirs += 1
             return {"manifests": n_manifests, "data_dirs": n_dirs}
         finally:
             self._release_lock(token)
@@ -745,7 +710,7 @@ class SnapshotTable:
         # feeds the last-writer agg AND lays rows out for the bucketed
         # write below (pre_bucketed → the write adds no second shuffle)
         schema = T.StructType.fromJson(cur["schema"])
-        resolved = self._resolve_deltas(cur, schema, set(dirty),
+        resolved = self._resolve_deltas(cur, schema, None, set(dirty),
                                         cluster_by_bucket=True)
         snap_id = self._new_snap_id()
         data_dir = self._write_buckets(resolved, snap_id, pre_bucketed=True)

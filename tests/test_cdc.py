@@ -2,6 +2,7 @@
 oracle (F4)."""
 
 import hashlib
+import os
 import re
 import shutil
 import tempfile
@@ -392,19 +393,78 @@ def test_expire_snapshots_keeps_current_state(spark, tmp_root):
                           num_buckets=8, strategy="mor", compact_every=3)
     CdcReplayer(table).replay(events)
     before = table_state(spark, table)
-    n_hist = len(table.snapshot_history())
-    assert n_hist > 2
+    hist = table.snapshot_history()
+    assert len(hist) > 2
+    kept_deltas = {d["dir"] for s in hist[:2] for d in s["deltas"]}
+    expired_deltas = {d["dir"] for s in hist[2:] for d in s["deltas"]}
+    expired_deltas -= kept_deltas
+    assert expired_deltas
     # grace=0: no concurrent writer in this test; default 300 s grace
     # would skip the just-written dirs
     stats = table.expire_snapshots(keep_last=2, data_grace_seconds=0.0)
     assert stats["manifests"] > 0 and stats["data_dirs"] > 0
     assert len(table.snapshot_history()) == 2
+    # flat delta dirs of expired epochs are reclaimed, retained ones stay
+    assert not any(os.path.exists(d) for d in expired_deltas)
+    assert all(os.path.isdir(d) for d in kept_deltas)
     assert table_state(spark, table) == before  # current read unchanged
     # time travel past the horizon refuses instead of answering wrong
     oldest = table.snapshot_history()[-1]["epoch"]
     if oldest > 1:
         with pytest.raises(ValueError, match="expired"):
             table.read(at_epoch=oldest - 1)
+    events.unpersist()
+
+
+@pytest.mark.parametrize("shuffle_partitions", [1, 4, 16])
+def test_upsert_beats_delete_of_same_key_in_one_merge(
+        spark, tmp_root, strategy, shuffle_partitions):
+    """merge(upserts, delete_keys) sharing a key upserts it — one
+    documented answer whatever the strategy or partition count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        table = SnapshotTable(spark, tmp_root, ["repo", "path"],
+                              num_buckets=8, strategy=strategy)
+        cols = ["repo", "path", "content"]
+        table.merge(spark.createDataFrame(
+            [("r", "p", "v0"), ("r", "q", "w0")], cols), None, epoch=0)
+        table.merge(spark.createDataFrame([("r", "p", "v1")], cols),
+                    spark.createDataFrame([("r", "p")], ["repo", "path"]),
+                    epoch=1)
+        got = {r["path"]: r["content"] for r in table.read().collect()}
+        assert got == {"p": "v1", "q": "w0"}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_mor_delta_is_a_few_bucket_tagged_files(spark, tmp_root):
+    """A small batch into a 64-bucket MOR table lands as at most
+    defaultParallelism files (not one per bucket and side), and a
+    bucket-pruned read of the pending delta pushes a __bucket__ filter
+    into the delta scan and returns exactly that bucket's rows."""
+    events = make_events(spark, 600, 300).persist()
+    table = SnapshotTable(spark, tmp_root, ["repo", "path"], num_buckets=64,
+                          strategy="mor", compact_every=100)
+    CdcReplayer(table).replay(events)
+    snap = table.current_snapshot()
+    assert snap["operation"] == "merge-mor"
+    delta = snap["deltas"][-1]
+    files = [f for f in os.listdir(delta["dir"]) if f.endswith(".parquet")]
+    assert 1 <= len(files) <= spark.sparkContext.defaultParallelism
+    assert len(delta["buckets"]) > len(files)
+
+    k = delta["buckets"][0]
+    pruned = table.read(buckets=[k])
+    # only the delta scan reads __bucket__ (base rows carry no such column)
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    pushed = [re.search(r"PushedFilters: \[([^\]]*)", ln).group(1)
+              for ln in plan.splitlines() if "FileScan" in ln]
+    assert any("__bucket__" in p for p in pushed)
+    bucket = F.pmod(F.xxhash64("repo", "path"), F.lit(64))
+    full = table.read().where(bucket == k)
+    assert sorted(pruned.collect()) == sorted(full.collect())
+    assert pruned.count() > 0
     events.unpersist()
 
 
